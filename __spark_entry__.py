@@ -8847,12 +8847,15 @@ def q_crawl_seen_sizing(spark: SparkSession, sf_dir: str) -> DataFrame:
     URL count and each target false-positive rate, the bloom-tier
     bits/key, hash count, total bytes, and per-slab bytes at the
     32-slab layout — the sizing table an operator reads BEFORE
-    setting bloom_slabs/fpp at 10^10 keys (the IncrementalBloomSeen
-    manifest consumes exactly these numbers).  The Bloom constants
+    choosing an fpp at 10^10 keys (IncrementalBloomSeen sizes its
+    slabs by the same formulas).  The Bloom constants
     m/n = −ln p/ln²2 and k = (m/n)·ln 2 enter as exact integer
-    milli-literals per fpp row (the Benford fixed-literal
-    discipline — no runtime logs), so the whole table is integer
-    arithmetic off ONE distinct-count scan."""
+    literals per fpp row (the Benford fixed-literal discipline — no
+    runtime logs): bits/key in milli-bits is the CEILING of
+    1000·(−ln p)/ln²2 (9585.06, 14377.59, 19170.12 → 9586, 14378,
+    19171) and k rounds to NEAREST ((m/n)·ln 2 = 6.64, 9.97, 13.29 →
+    7, 10, 13), so the whole table is integer arithmetic off ONE
+    distinct-count scan."""
     fpp = spark.createDataFrame(
         [("1e-2", 9586, 7), ("1e-3", 14378, 10), ("1e-4", 19171, 13)],
         "fpp string, bits_per_key_milli long, k_hashes long")

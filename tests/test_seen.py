@@ -1,6 +1,7 @@
 """Probabilistic seen-set tiers (operators/seen.py): no false
-negatives ever; FP rate within bound; bloom-accelerated anti-join is
-bit-identical to the exact anti-join (D1); cuckoo supports delete."""
+negatives ever; FP rate within bound; a filter tier in front of the
+exact backstop is bit-identical to the exact anti-join (D1); cuckoo
+supports delete."""
 
 from __future__ import annotations
 
@@ -10,8 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from web_graph_spark.operators.seen import (BloomFilter, CuckooFilter,
-                                            PartitionedCuckooSeen,
-                                            anti_join_bloom, build_bloom)
+                                            IncrementalBloomSeen,
+                                            PartitionedCuckooSeen)
 
 
 def keys(prefix: str, n: int) -> pd.Series:
@@ -74,157 +75,82 @@ def test_cuckoo_idempotent_insert():
 # spark integration
 # ---------------------------------------------------------------------------
 
-@pytest.mark.spark
-def test_anti_join_bloom_equals_exact(spark):
-    """Default path (now sharded — VERDICT r3 #6) and the explicit
-    legacy single-bitmap path both ≡ the exact anti-join."""
-    cand = spark.range(0, 5000).select(
-        F.sha1(F.col("id").cast("string")).alias("page_id"))
-    seen = spark.range(0, 3000, 2).select(  # every even id < 3000
-        F.sha1(F.col("id").cast("string")).alias("page_id"))
-    exact = {r["page_id"] for r in
-             cand.join(seen, "page_id", "left_anti").collect()}
-    fast = {r["page_id"] for r in
-            anti_join_bloom(spark, cand, seen, "page_id").collect()}
-    assert fast == exact
-    assert len(fast) == 5000 - 1500
-    legacy = {r["page_id"] for r in
-              anti_join_bloom(spark, cand, seen, "page_id",
-                              n_slabs=1).collect()}
-    assert legacy == exact
+# tier class, its persisted part-count column, its size bound and a
+# bound small enough to split 4000 keys into several parts
+TIERS = {"bloom": (IncrementalBloomSeen, "n_slabs", "SLAB_BYTES_BOUND",
+                   4096),
+         "cuckoo": (PartitionedCuckooSeen, "n_parts", "KEYS_PER_SHARD",
+                    2000)}
 
 
-@pytest.mark.spark
-def test_build_bloom_distributed_matches_local(spark):
-    df = spark.range(0, 4000).select(
-        F.concat(F.lit("u-"), F.col("id")).alias("k")).repartition(8)
-    bf = build_bloom(df, "k", expected=4000, fpp=0.01)
-    local = pd.Series([f"u-{i}" for i in range(4000)])
-    assert bf.might_contain(local).all()
-    other = pd.Series([f"v-{i}" for i in range(4000)])
-    assert bf.might_contain(other).mean() < 0.02
-
-
-@pytest.mark.spark
-def test_partitioned_cuckoo_probe(spark):
-    seen = spark.range(0, 6000).select(
-        F.concat(F.lit("s-"), F.col("id")).alias("page_id")).repartition(8)
-    pc = PartitionedCuckooSeen(n_parts=8, expected_per_part=2000)
-    states = pc.build(seen, "page_id").persist()
-    st = states.collect()
-    assert {int(r["shard"]) for r in st} == set(range(8))
-    assert sum(r["n_keys"] for r in st) == 6000
-
-    cand = spark.range(0, 12000).select(
+def _ids(spark, lo: int, hi: int):
+    return spark.range(lo, hi).select(
         F.concat(F.lit("s-"), F.col("id")).alias("page_id"))
-    probed = pc.probe(spark, states, cand, "page_id").collect()
-    res = {r["page_id"]: r["maybe_seen"] for r in probed}
-    # no false negatives
-    assert all(res[f"s-{i}"] for i in range(6000))
-    # FP bound on the unseen half
-    fp = np.mean([res[f"s-{i}"] for i in range(6000, 12000)])
-    assert fp < 0.002, fp
-    states.unpersist()
 
 
-@pytest.mark.spark
-def test_anti_join_bloom_sharded_equals_exact(spark):
-    """Slab tier (n_slabs>1): per-slab build/merge/probe with no
-    driver-side bitmap — result ≡ exact anti-join."""
-    cand = spark.range(0, 5000).select(
-        F.sha1(F.col("id").cast("string")).alias("page_id"))
-    seen = spark.range(0, 3000, 2).select(
-        F.sha1(F.col("id").cast("string")).alias("page_id"))
-    exact = {r["page_id"] for r in
-             cand.join(seen, "page_id", "left_anti").collect()}
-    fast = {r["page_id"] for r in
-            anti_join_bloom(spark, cand, seen, "page_id",
-                            n_slabs=4).collect()}
-    assert fast == exact
-    assert len(fast) == 5000 - 1500
-
-
-@pytest.mark.spark
-def test_cuckoo_update_incremental(spark):
-    """update() ≡ build() over the union, membership-wise: no false
-    negatives on old or new keys; FP bound holds on unseen keys."""
-    base = spark.range(0, 4000).select(
-        F.concat(F.lit("s-"), F.col("id")).alias("page_id"))
-    extra = spark.range(4000, 6000).select(
-        F.concat(F.lit("s-"), F.col("id")).alias("page_id"))
-    pc = PartitionedCuckooSeen(n_parts=4, expected_per_part=4000)
-    st0 = pc.build(base, "page_id").localCheckpoint()
-    st1 = pc.update(st0, extra, "page_id").localCheckpoint()
-    assert sum(r["n_keys"] for r in st1.collect()) == 6000
-    cand = spark.range(0, 12000).select(
-        F.concat(F.lit("s-"), F.col("id")).alias("page_id"))
-    res = {r["page_id"]: r["maybe_seen"] for r in
-           pc.probe(spark, st1, cand, "page_id").collect()}
-    assert all(res[f"s-{i}"] for i in range(6000))
-    fp = np.mean([res[f"s-{i}"] for i in range(6000, 12000)])
-    assert fp < 0.002, fp
-
-
-@pytest.mark.spark
-def test_crawler_cuckoo_seen_equals_exact(spark, fixture_dir, tmp_path):
-    """seen_mode='cuckoo' (persisted shard blobs, incremental update,
-    exact backstop) is a pure physical optimization."""
-    from web_graph_spark.crawler import SparkCrawler, load_web
-
-    web = load_web(spark, fixture_dir)
-    seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
-
-    def run(mode, d):
-        c = SparkCrawler(spark, d, web, max_waves=3, seen_mode=mode,
-                         cuckoo_shards=4)
-        c.init_from_seeds(seeds)
-        c.run()
-        return c.store
-
-    a = run("exact", str(tmp_path / "cx"))
-    b = run("cuckoo", str(tmp_path / "ck"))
-    for t in ("crawl_order", "pages", "edges", "seen"):
-        ra = sorted(map(tuple, a.read(t).drop("wave").collect()))
-        rb = sorted(map(tuple, b.read(t).drop("wave").collect()))
-        assert ra == rb, t
-    # blobs were persisted per committed wave
-    assert b.read("cuckoo_state").count() > 0
-
-
-@pytest.mark.spark
-def test_crawler_cuckoo_resume_missing_blobs(spark, fixture_dir,
-                                             tmp_path):
-    """Kill-and-resume with DELETED cuckoo blobs: the tier rebuilds its
-    shard states from the exact seen table and the finished crawl
-    matches an uninterrupted exact-mode run."""
-    import shutil as _sh
-
-    from web_graph_spark.crawler import SparkCrawler, load_web
-
-    web = load_web(spark, fixture_dir)
-    seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
-    d = str(tmp_path / "ckr")
-    c1 = SparkCrawler(spark, d, web, max_waves=2, seen_mode="cuckoo",
-                      cuckoo_shards=4)
-    c1.init_from_seeds(seeds)
-    c1.run()
-    _sh.rmtree(f"{d}/cuckoo_state")  # lose every blob
-    c2 = SparkCrawler(spark, d, web, max_waves=4, seen_mode="cuckoo",
-                      cuckoo_shards=4)
-    c2.init_from_seeds(seeds)  # no-op on resume
-    c2.run()
-    ref = SparkCrawler(spark, str(tmp_path / "ckref"), web, max_waves=4)
-    ref.init_from_seeds(seeds)
-    ref.run()
-    for t in ("crawl_order", "pages", "edges", "seen"):
-        ra = sorted(map(tuple, c2.store.read(t).drop("wave").collect()))
-        rb = sorted(map(tuple, ref.store.read(t).drop("wave").collect()))
+def _assert_same_crawl(a, b):
+    """Final crawl_order, pages, seen and edges tables are identical."""
+    for t in ("crawl_order", "pages", "seen", "edges"):
+        ra = sorted(map(tuple, a.store.read(t).collect()))
+        rb = sorted(map(tuple, b.store.read(t).collect()))
         assert ra == rb, t
 
 
 @pytest.mark.spark
-def test_crawler_bloom_seen_equals_exact(spark, fixture_dir, tmp_path):
-    """seen_mode='bloom' is a pure physical optimization: final
+@pytest.mark.parametrize("several", [False, True],
+                         ids=["one_part", "several_parts"])
+@pytest.mark.parametrize("tier", sorted(TIERS))
+def test_seen_tier_partition_equals_anti_join(spark, monkeypatch, tier,
+                                              several):
+    """build (distributed) → update → partition + exact backstop ≡ the
+    left-anti join, at one part and at several (size bound shrunk):
+    every part has a state row carrying the part count, no false
+    negatives on old or new keys, FP rate within the tier's bound, and
+    valid_parts accepts the state until it outgrows its capacity."""
+    cls, part_col, bound, small = TIERS[tier]
+    if several:
+        monkeypatch.setattr(cls, bound, small)
+    ts = cls()
+    n_parts = ts.parts_for(4000)
+    assert (n_parts > 1) == several, n_parts
+
+    base, extra = _ids(spark, 0, 4000), _ids(spark, 4000, 6000)
+    st0 = ts.build(base.repartition(8), "page_id", 4000).localCheckpoint()
+    assert ts.valid_parts(st0) == n_parts
+    st1 = ts.update(st0, extra, "page_id", n_parts).localCheckpoint()
+    rows = st1.collect()
+    assert {int(r[part_col]) for r in rows} == {n_parts}
+    assert sum(r["n_keys"] for r in rows) == 6000
+    assert ts.valid_parts(st1) == n_parts
+
+    seen = base.unionByName(extra)
+    cand = _ids(spark, 0, 12000)
+    new, maybe = ts.partition(st1, cand, "page_id", n_parts)
+    maybe_ids = {r["page_id"] for r in maybe.collect()}
+    assert {f"s-{i}" for i in range(6000)} <= maybe_ids   # no false neg.
+    fp = len(maybe_ids) / 6000 - 1
+    assert fp < {"bloom": 0.02, "cuckoo": 0.002}[tier], fp
+    pending = new.unionByName(maybe.join(seen, "page_id", "left_anti"))
+    exact = cand.join(seen, "page_id", "left_anti")
+    assert (sorted(r["page_id"] for r in pending.collect())
+            == sorted(r["page_id"] for r in exact.collect()))
+
+    # past capacity → rebuild
+    if tier == "bloom":      # slabs beyond the size they were built for
+        n_more = 2 * int(ts.headroom * 4000)
+    else:                    # |keys| reaches n_parts × KEYS_PER_SHARD
+        n_more = n_parts * cls.KEYS_PER_SHARD - 6000
+    st2 = ts.update(st1, _ids(spark, 6000, 6000 + n_more), "page_id",
+                    n_parts)
+    assert ts.valid_parts(st2) is None
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("mode", sorted(TIERS))
+def test_crawler_tier_seen_equals_exact(spark, fixture_dir, tmp_path,
+                                        mode):
+    """seen_mode='bloom'/'cuckoo' (persisted filter state, incremental
+    update, exact backstop) is a pure physical optimization: final
     crawl_order, pages, edges, and seen set are bit-identical."""
     from web_graph_spark.crawler import SparkCrawler, load_web
 
@@ -235,14 +161,44 @@ def test_crawler_bloom_seen_equals_exact(spark, fixture_dir, tmp_path):
         c = SparkCrawler(spark, d, web, max_waves=3, seen_mode=mode)
         c.init_from_seeds(seeds)
         c.run()
-        return c.store
+        return c
 
-    a = run("exact", str(tmp_path / "exact"))
-    b = run("bloom", str(tmp_path / "bloom"))
-    for t in ("crawl_order", "pages", "edges", "seen"):
-        ra = sorted(map(tuple, a.read(t).drop("wave").collect()))
-        rb = sorted(map(tuple, b.read(t).drop("wave").collect()))
-        assert ra == rb, t
+    b = run(mode, str(tmp_path / mode))
+    _assert_same_crawl(run("exact", str(tmp_path / "exact")), b)
+    # the filter state was persisted for the committed wave
+    assert b.store.read(TIERS[mode][0].TABLE).count() > 0
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize("mode", sorted(TIERS))
+def test_crawler_tier_resume_missing_state(spark, fixture_dir, tmp_path,
+                                           mode):
+    """The filter state is persisted per wave (no O(|seen|) rebuild scan
+    in steady state; superseded partitions pruned) and, after a
+    kill-and-resume with the state DELETED, rebuilt from the exact seen
+    table — the finished crawl matches an uninterrupted exact run."""
+    import shutil
+
+    from web_graph_spark.crawler import SparkCrawler, load_web
+
+    web = load_web(spark, fixture_dir)
+    seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
+    table = TIERS[mode][0].TABLE
+
+    def crawl(d, waves, mode):
+        c = SparkCrawler(spark, str(d), web, max_waves=waves,
+                         default_budget=5, seen_mode=mode)
+        c.init_from_seeds(seeds)
+        c.run()
+        return c
+
+    a = crawl(tmp_path / "a", 2, mode)
+    waves = {r["wave"] for r in
+             a.store.read(table).select("wave").distinct().collect()}
+    assert waves == {a.store.committed_wave()}, waves
+    shutil.rmtree(tmp_path / "a" / table)            # lose every blob
+    _assert_same_crawl(crawl(tmp_path / "a", 4, mode),
+                       crawl(tmp_path / "ref", 4, "exact"))
 
 
 @pytest.mark.spark
@@ -279,164 +235,59 @@ def test_bloom_expected_from_manifests_matches_table(spark, tmp_path):
     assert c2._seen_rows_upto(c2.store.committed_wave()) == n_table
 
 
-@pytest.mark.spark
-def test_incremental_bloom_update_equals_rebuild(spark):
-    """IncrementalBloomSeen: OR-ing new keys into persisted slabs must
-    probe exactly like a fresh build over the union — no false
-    negatives ever, all slabs present even when empty, and
-    needs_rebuild fires only past capacity."""
-    from web_graph_spark.operators.seen import IncrementalBloomSeen
-
-    ib = IncrementalBloomSeen(n_slabs=4, headroom=4.0)
-    base = spark.range(0, 5000).select(
-        F.concat(F.lit("k-"), F.col("id")).alias("page_id"))
-    extra = spark.range(5000, 9000).select(
-        F.concat(F.lit("k-"), F.col("id")).alias("page_id"))
-
-    st0 = ib.build(base, "page_id", n_keys=5000).localCheckpoint()
-    assert st0.count() == 4                       # every slab has a row
-    assert not IncrementalBloomSeen.needs_rebuild(st0)
-    st1 = ib.update(st0, extra, "page_id").localCheckpoint()
-    assert st1.count() == 4
-    assert st1.agg(F.sum("n_keys")).first()[0] == 9000
-
-    cand = spark.range(0, 12000).select(
-        F.concat(F.lit("k-"), F.col("id")).alias("page_id"))
-    new, maybe = ib.partition(st1, cand, "page_id")
-    maybe_ids = {r["page_id"] for r in maybe.collect()}
-    # no false negatives: every inserted key is in maybe
-    for i in (0, 4999, 5000, 8999):
-        assert f"k-{i}" in maybe_ids, i
-    assert new.count() + len(maybe_ids) == 12000
-    # fp rate among the 3000 never-inserted keys stays near target
-    fp = sum(1 for r in maybe_ids if int(r[2:]) >= 9000) / 3000
-    assert fp < 0.05, fp
-
-    # probing the incrementally-updated state == probing a fresh build
-    st_fresh = ib.build(base.unionByName(extra), "page_id",
-                        n_keys=9000)
-    # (different capacity ⇒ different bitmaps; compare CONTRACT, not
-    # bits: both must contain all inserted keys)
-    _, maybe_f = ib.partition(st_fresh, cand, "page_id")
-    inserted = {f"k-{i}" for i in range(9000)}
-    assert inserted <= {r["page_id"] for r in maybe_f.collect()}
-    assert inserted <= maybe_ids
-
-    # capacity: push past headroom*build size → rebuild flag
-    tiny = IncrementalBloomSeen(n_slabs=2, headroom=1.0)
-    st = tiny.build(base.limit(100), "page_id", n_keys=100)
-    st = tiny.update(st, extra, "page_id")
-    assert IncrementalBloomSeen.needs_rebuild(st)
-
-
-@pytest.mark.spark
-def test_crawler_bloom_state_persists_and_rebuilds(spark, fixture_dir,
-                                                   tmp_path):
-    """The bloom tier's state is persisted per wave (no O(|seen|)
-    rebuild scan in steady state) and rebuilt from the exact seen
-    table when the blobs are deleted — final state identical either
-    way."""
-    import shutil
-
-    from web_graph_spark.crawler import SparkCrawler, load_web
-
-    web = load_web(spark, fixture_dir)
-    seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
-
-    def crawl(d, waves, **kw):
-        c = SparkCrawler(spark, str(d), web, max_waves=waves,
-                         default_budget=5, seen_mode="bloom", **kw)
-        c.init_from_seeds(seeds)
-        c.run()
-        return c
-
-    a = crawl(tmp_path / "a", 2)
-    # state blobs exist for the latest committed wave only (pruned)
-    st = a.store.read("bloom_state")
-    waves = {r["wave"] for r in st.select("wave").distinct().collect()}
-    assert waves == {a.store.committed_wave()}, waves
-    # kill the filter state; resume must rebuild from `seen` and end
-    # bit-identical to an uninterrupted crawl
-    shutil.rmtree(tmp_path / "a" / "bloom_state")
-    a2 = crawl(tmp_path / "a", 4)
-    b = crawl(tmp_path / "b", 4)
-    for t in ("crawl_order", "pages", "seen", "edges"):
-        ra = sorted(map(tuple, a2.store.read(t).collect()))
-        rb = sorted(map(tuple, b.store.read(t).collect()))
-        assert ra == rb, t
-
-
 # ---------------------------------------------------------------------------
-# round-4: shard-count safety + auto-sizing (ADVICE r3 #1, VERDICT r3 #2)
+# round-4: part-count safety + auto-sizing (ADVICE r3 #1, VERDICT r3 #2)
 # ---------------------------------------------------------------------------
 
 @pytest.mark.spark
-def test_crawler_bloom_resume_with_different_slabs_rebuilds(
-        spark, fixture_dir, tmp_path):
-    """Resuming with a DIFFERENT explicit bloom_slabs must rebuild the
-    filter (persisted n_slabs mismatch), never route keys into the
-    wrong slab's bitmap — a mis-route would emit false 'definitely
-    new' verdicts and re-crawl seen pages (ADVICE r3 #1)."""
+@pytest.mark.parametrize("mode", sorted(TIERS))
+def test_crawler_resume_with_different_bound_routes_by_state(
+        spark, fixture_dir, tmp_path, monkeypatch, mode):
+    """Resuming under a size bound that derives a DIFFERENT part count
+    must keep routing by the count persisted in the state — routing by
+    the count derived now would send keys to the wrong part's filter,
+    emit false 'definitely new' verdicts and re-crawl seen pages
+    (ADVICE r3 #1)."""
     from web_graph_spark.crawler import SparkCrawler, load_web
 
     web = load_web(spark, fixture_dir)
     seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
+    cls, part_col, bound, _ = TIERS[mode]
 
-    def crawl(d, waves, slabs):
+    def crawler(d, waves, mode):
         c = SparkCrawler(spark, str(d), web, max_waves=waves,
-                         default_budget=5, seen_mode="bloom",
-                         bloom_slabs=slabs)
+                         default_budget=5, seen_mode=mode)
         c.init_from_seeds(seeds)
-        c.run()
         return c
 
-    crawl(tmp_path / "a", 2, 2)
-    a = crawl(tmp_path / "a", 4, 4)          # resume, different slabs
-    assert {int(r["n_slabs"]) for r in
-            a.store.read("bloom_state").select("n_slabs").collect()} == {4}
-    b = crawl(tmp_path / "b", 4, 4)          # uninterrupted reference
-    for t in ("crawl_order", "pages", "seen", "edges"):
-        ra = sorted(map(tuple, a.store.read(t).drop("wave").collect()))
-        rb = sorted(map(tuple, b.store.read(t).drop("wave").collect()))
-        assert ra == rb, t
+    with monkeypatch.context() as m:        # session 1: tiny parts
+        # (a 4-byte slab bound splits even the minimal 64-bit bitmap)
+        m.setattr(cls, bound, 4 if mode == "bloom" else 8)
+        crawler(tmp_path / "a", 2, mode).run()
+    a = crawler(tmp_path / "a", 4, mode)    # session 2: default bound
+    n1 = {int(r[part_col]) for r in a.store.read(cls.TABLE).collect()}
+    assert len(n1) == 1 and n1 != {1}, n1
+    n_seen = a.store.read("seen").count()
+    assert a._tier.parts_for(n_seen) == 1    # the mismatch is real
+    used = []
+    real = a._tier.partition
 
+    def spy(states, candidates, key_col, n_parts):
+        used.append(n_parts)
+        return real(states, candidates, key_col, n_parts)
 
-@pytest.mark.spark
-def test_crawler_cuckoo_resume_with_different_shards_rebuilds(
-        spark, fixture_dir, tmp_path):
-    """Same contract for the cuckoo tier: persisted n_parts wins over a
-    mismatching config by forcing a rebuild at the new count."""
-    from web_graph_spark.crawler import SparkCrawler, load_web
-
-    web = load_web(spark, fixture_dir)
-    seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
-
-    def crawl(d, waves, shards):
-        c = SparkCrawler(spark, str(d), web, max_waves=waves,
-                         default_budget=5, seen_mode="cuckoo",
-                         cuckoo_shards=shards)
-        c.init_from_seeds(seeds)
-        c.run()
-        return c
-
-    crawl(tmp_path / "a", 2, 4)
-    a = crawl(tmp_path / "a", 4, 2)          # resume, different shards
-    assert {int(r["n_parts"]) for r in
-            a.store.read("cuckoo_state").select("n_parts").collect()} == {2}
-    ref = SparkCrawler(spark, str(tmp_path / "ref"), web, max_waves=4,
-                       default_budget=5)
-    ref.init_from_seeds(seeds)
+    monkeypatch.setattr(a._tier, "partition", spy)
+    a.run()
+    assert used[0] == n1.pop()
+    ref = crawler(tmp_path / "ref", 4, "exact")
     ref.run()
-    for t in ("crawl_order", "pages", "seen", "edges"):
-        ra = sorted(map(tuple, a.store.read(t).drop("wave").collect()))
-        rb = sorted(map(tuple, ref.store.read(t).drop("wave").collect()))
-        assert ra == rb, t
+    _assert_same_crawl(a, ref)
 
 
 @pytest.mark.spark
 def test_bloom_auto_slab_count_grows_with_seen(spark, monkeypatch,
                                                tmp_path):
-    """Default (auto) slab sizing: as |seen| grows past the capacity a
+    """Slab sizing from |seen|: as |seen| grows past the capacity a
     state set was built for, the rebuild re-derives the slab COUNT so
     no persisted bitmap ever exceeds SLAB_BYTES_BOUND (VERDICT r3 #2 —
     a fixed count would make slabs grow into 12 GiB single-task blobs
@@ -444,7 +295,6 @@ def test_bloom_auto_slab_count_grows_with_seen(spark, monkeypatch,
     fixture crawl crosses several resizes; results stay ≡ exact."""
     from web_graph_spark.benchjobs import synth_consistent_web
     from web_graph_spark.crawler import SparkCrawler
-    from web_graph_spark.operators.seen import IncrementalBloomSeen
 
     monkeypatch.setattr(IncrementalBloomSeen, "SLAB_BYTES_BOUND", 64)
     web = synth_consistent_web(spark, 2000)
@@ -454,7 +304,7 @@ def test_bloom_auto_slab_count_grows_with_seen(spark, monkeypatch,
 
     c = SparkCrawler(spark, str(tmp_path / "a"), web, max_waves=2,
                      seen_mode="bloom")
-    c._bloom.headroom = 1.0
+    c._tier.headroom = 1.0
     c.init_from_seeds(seeds)
     c.run()
     st0 = c.store.read("bloom_state").collect()
@@ -462,7 +312,7 @@ def test_bloom_auto_slab_count_grows_with_seen(spark, monkeypatch,
 
     c2 = SparkCrawler(spark, str(tmp_path / "a"), web, max_waves=5,
                       seen_mode="bloom")
-    c2._bloom.headroom = 1.0
+    c2._tier.headroom = 1.0
     c2.init_from_seeds(seeds)
     c2.run()
     st1 = c2.store.read("bloom_state").collect()
@@ -476,21 +326,20 @@ def test_bloom_auto_slab_count_grows_with_seen(spark, monkeypatch,
     ref = SparkCrawler(spark, str(tmp_path / "ref"), web, max_waves=5)
     ref.init_from_seeds(seeds)
     ref.run()
-    for t in ("crawl_order", "pages", "seen", "edges"):
-        ra = sorted(map(tuple, c2.store.read(t).drop("wave").collect()))
-        rb = sorted(map(tuple, ref.store.read(t).drop("wave").collect()))
-        assert ra == rb, t
+    _assert_same_crawl(c2, ref)
 
 
 @pytest.mark.spark
-def test_cuckoo_auto_shard_count_grows_with_seen(spark, tmp_path):
-    """Auto cuckoo sharding: a crawl whose |seen| outgrows the shard
-    set's design capacity (n_parts × expected_per_part) rebuilds with
-    more shards instead of overflowing — blobs stay bounded by
-    construction (each shard is sized for expected_per_part keys)."""
+def test_cuckoo_auto_shard_count_grows_with_seen(spark, monkeypatch,
+                                                 tmp_path):
+    """Cuckoo sharding from |seen|: a crawl whose |seen| outgrows the
+    shard set's design capacity (n_parts × KEYS_PER_SHARD) rebuilds
+    with more shards instead of overflowing — blobs stay bounded by
+    construction (each shard is sized for KEYS_PER_SHARD keys)."""
     from web_graph_spark.benchjobs import synth_consistent_web
     from web_graph_spark.crawler import SparkCrawler
 
+    monkeypatch.setattr(PartitionedCuckooSeen, "KEYS_PER_SHARD", 32)
     web = synth_consistent_web(spark, 2000)
     num = F.regexp_extract("url", r"/d/([0-9]+)\.html", 1).cast("long")
     seeds = (web.withColumn("__n", num).filter(F.col("__n") < 10)
@@ -498,8 +347,7 @@ def test_cuckoo_auto_shard_count_grows_with_seen(spark, tmp_path):
 
     def crawl(waves):
         c = SparkCrawler(spark, str(tmp_path / "a"), web,
-                         max_waves=waves, seen_mode="cuckoo",
-                         cuckoo_expected_per_shard=32)
+                         max_waves=waves, seen_mode="cuckoo")
         c.init_from_seeds(seeds)
         c.run()
         return c
@@ -514,16 +362,13 @@ def test_cuckoo_auto_shard_count_grows_with_seen(spark, tmp_path):
     assert parts1.pop() > parts0.pop()
     # per-shard key load stays near the designed capacity (rebuild is
     # amortized — between rebuilds a shard may run somewhat past
-    # expected_per_part, but never to the physical slot count)
+    # KEYS_PER_SHARD, but never to the physical slot count)
     assert max(int(r["n_keys"]) for r in st) <= 64
 
     ref = SparkCrawler(spark, str(tmp_path / "ref"), web, max_waves=5)
     ref.init_from_seeds(seeds)
     ref.run()
-    for t in ("crawl_order", "pages", "seen", "edges"):
-        ra = sorted(map(tuple, c2.store.read(t).drop("wave").collect()))
-        rb = sorted(map(tuple, ref.store.read(t).drop("wave").collect()))
-        assert ra == rb, t
+    _assert_same_crawl(c2, ref)
 
 
 @pytest.mark.spark
@@ -560,25 +405,31 @@ def test_seen_rows_upto_falls_back_on_legacy_manifest(spark, fixture_dir,
 
 
 @pytest.mark.spark
+@pytest.mark.parametrize("mode", sorted(TIERS))
 def test_filter_state_prune_deferred_until_commit(spark, fixture_dir,
-                                                  tmp_path):
+                                                  tmp_path, mode):
     """The previous wave's committed filter state must survive a crash
     between the new state's write and the wave's manifest commit —
     pruning at write time would force a full O(|seen|) rebuild on
-    every such resume (ADVICE r3 #3)."""
+    every such resume (ADVICE r3 #3).  Idle follow-mode waves (nothing
+    scheduled, nothing committed) must not leave their filter state
+    behind either."""
+    import os
+
     from web_graph_spark.crawler import SparkCrawler, load_web
 
     web = load_web(spark, fixture_dir)
     seeds = spark.read.parquet(f"{fixture_dir}/seeds.parquet")
+    table = TIERS[mode][0].TABLE
     d = str(tmp_path / "s")
-    c = SparkCrawler(spark, d, web, max_waves=2, seen_mode="cuckoo")
+    c = SparkCrawler(spark, d, web, max_waves=2, seen_mode=mode)
     c.init_from_seeds(seeds)
     c.run()
     committed = c.store.committed_wave()
-    assert {r["wave"] for r in c.store.read("cuckoo_state")
+    assert {r["wave"] for r in c.store.read(table)
             .select("wave").distinct().collect()} == {committed}
 
-    c2 = SparkCrawler(spark, d, web, max_waves=4, seen_mode="cuckoo")
+    c2 = SparkCrawler(spark, d, web, max_waves=4, seen_mode=mode)
     real_commit = c2.store.commit
     def boom(wave, **extra):
         raise RuntimeError("crash before commit")
@@ -588,20 +439,25 @@ def test_filter_state_prune_deferred_until_commit(spark, fixture_dir,
     c2.store.commit = real_commit
     # the last COMMITTED state partition is still on disk — the
     # crashed wave's write did not prune it
-    import os
-    assert os.path.isdir(os.path.join(d, "cuckoo_state",
-                                      f"wave={committed}"))
+    assert os.path.isdir(os.path.join(d, table, f"wave={committed}"))
     # and a clean resume finishes ≡ an uninterrupted exact run
-    c3 = SparkCrawler(spark, d, web, max_waves=4, seen_mode="cuckoo")
+    c3 = SparkCrawler(spark, d, web, max_waves=4, seen_mode=mode)
     c3.init_from_seeds(seeds)
     c3.run()
     ref = SparkCrawler(spark, str(tmp_path / "ref"), web, max_waves=4)
     ref.init_from_seeds(seeds)
     ref.run()
-    for t in ("crawl_order", "pages", "seen", "edges"):
-        ra = sorted(map(tuple, c3.store.read(t).drop("wave").collect()))
-        rb = sorted(map(tuple, ref.store.read(t).drop("wave").collect()))
-        assert ra == rb, t
+    _assert_same_crawl(c3, ref)
+
+    # follow mode past the drained frontier (the fixture drains in six
+    # waves; the inbox never appears): the idle, uncommitted waves
+    # discard their filter-state partition along with `seen`
+    c4 = SparkCrawler(spark, d, web, max_waves=8, seen_mode=mode,
+                      inbox_dir=str(tmp_path / "no-inbox"),
+                      inbox_mode="follow")
+    assert c4.run() == 8
+    assert c4.store.committed_wave() < 7
+    assert max(c4.store._live_waves(table)) <= c4.store.committed_wave()
 
 
 def test_cuckoo_fill_check_raises_before_thrash():

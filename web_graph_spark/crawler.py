@@ -36,10 +36,15 @@ from .canon import canonicalize_df
 from .operators import frontier as fseq
 from .operators.extract import extract_links
 from .operators.politeness import schedule_wave
+from .operators.seen import IncrementalBloomSeen, PartitionedCuckooSeen
 from .oracle import HTML_CTYPES
 from .storage import WaveStore
 
 UNBOUNDED = 1 << 60
+
+# seen_mode → probabilistic seen-filter tier (operators/seen.py); the
+# exact mode has none
+SEEN_TIERS = {"bloom": IncrementalBloomSeen, "cuckoo": PartitionedCuckooSeen}
 
 
 def load_web(spark: SparkSession, fixture_dir: str) -> DataFrame:
@@ -84,9 +89,6 @@ class SparkCrawler:
                  priority: str = "fifo", fetch_salt_buckets: int = 8,
                  seen_mode: str = "exact", bucketed_state: bool = False,
                  n_buckets: int = 32, fetcher=None,
-                 bloom_slabs: int | None = None,
-                 cuckoo_shards: int | None = None,
-                 cuckoo_expected_per_shard: int = 1 << 16,
                  wave_seconds: float | None = None,
                  compact_every: int | None = None,
                  inbox_dir: str | None = None,
@@ -194,51 +196,30 @@ class SparkCrawler:
         self.max_wave_urls = max_wave_urls
         # hot-host fan-out for the fetch stage (operators/skew.py)
         self.fetch_salt_buckets = fetch_salt_buckets
-        # "exact" = plain left-anti; "bloom" = bloom pre-filter with
-        # the exact anti-join as backstop (operators/seen.py) — same
-        # result set, but definite-negatives skip the join shuffle (the
-        # 10^10-frontier hot path per the north_star); "cuckoo" = the
-        # partitioned cuckoo tier: shard states persisted as blobs in
-        # the WaveStore per wave (north_rule per-partition checkpoint
-        # state), updated incrementally, rebuilt from the exact seen
-        # table when blobs are missing — same exact-backstop contract.
-        assert seen_mode in ("exact", "bloom", "cuckoo")
+        # "exact" = plain left-anti; "bloom"/"cuckoo" = a persisted,
+        # partitioned membership filter in front of that anti-join
+        # (operators/seen.py): definite-negatives skip the join
+        # shuffle (the 10^10-frontier hot path per the north_star),
+        # maybes go through the exact backstop — same result set.  The
+        # filter state is one blob row per part in the tier's TABLE,
+        # written per wave (north_rule per-partition checkpoint
+        # state), updated incrementally, and rebuilt from the exact
+        # seen table when missing, inconsistent or over capacity.
+        if seen_mode != "exact" and seen_mode not in SEEN_TIERS:
+            raise ValueError(f"unknown seen_mode {seen_mode!r}")
         self.seen_mode = seen_mode
-        # bloom_slabs>1 shards the bloom bitmap so no single merge/
-        # broadcast exceeds one slab (seen.py slab tier).
-        self.bloom_slabs = bloom_slabs
-        if seen_mode == "cuckoo":
-            from .operators.seen import PartitionedCuckooSeen
-
-            # cuckoo_shards=None (default) auto-sizes the shard count
-            # from manifest |seen| at every (re)build, so blobs stay
-            # bounded at any crawl size (VERDICT r3 #2); an explicit
-            # int pins it (resume with a different pin → rebuild, never
-            # mis-route — ADVICE r3 #1).
-            self._cuckoo = PartitionedCuckooSeen(
-                n_parts=cuckoo_shards,
-                expected_per_part=cuckoo_expected_per_shard)
-            self._cuckoo_cache: tuple[int, DataFrame, int] | None = None
-        elif seen_mode == "bloom":
-            from .operators.seen import IncrementalBloomSeen
-
-            # incremental persisted slab blooms: per-wave cost O(wave)
-            # (OR-in the new keys), never an O(|seen|) rebuild scan;
-            # resized by full rebuild (amortized doubling) when a slab
-            # outgrows its headroom capacity — with the default
-            # bloom_slabs=None the rebuild ALSO re-derives the slab
-            # count from |seen|, keeping every bitmap blob under
-            # IncrementalBloomSeen.SLAB_BYTES_BOUND at any scale.
-            self._bloom = IncrementalBloomSeen(n_slabs=bloom_slabs)
-            self._bloom_cache: tuple[int, DataFrame, int] | None = None
-        # |seen| tracked from manifest counters (bloom-filter sizing):
+        tier = SEEN_TIERS.get(seen_mode)
+        self._tier = tier() if tier is not None else None
+        # (wave, states, n_parts) of the filter state read for a wave
+        self._filter_cache: tuple[int, DataFrame, int] | None = None
+        # |seen| tracked from manifest counters (filter sizing):
         # lazily seeded from the committed manifests, then incremented
-        # in memory per wave — the bloom tier would otherwise pay a
+        # in memory per wave — a filter tier would otherwise pay a
         # full seen.count() scan every wave just to size the filter.
         self._seen_rows: int | None = None
         # filter-state partitions superseded this wave, pruned only
         # AFTER the wave's manifest commit (ADVICE r3 #3) — see
-        # _cuckoo_write / _flush_prunes.
+        # _filter_write / _flush_prunes.
         self._prune_after_commit: list[tuple[str, int]] = []
         self.metrics: list[WaveMetrics] = []
         # The per-wave metrics table write is observability data nothing
@@ -391,108 +372,39 @@ class SparkCrawler:
         return out
 
     # ------------------------------------------------------------------
-    def _bloom_states(self, wave: int):
-        """Latest persisted slab bitmaps (≤ wave-1) plus their slab
-        count → (states, n_slabs); rebuilt distributed from the exact
-        seen table when blobs are missing (fresh store, deleted
-        checkpoint, crash between writes), internally inconsistent, a
-        different slab count was explicitly configured (never
-        mis-route — ADVICE r3 #1), OR a slab outgrew the capacity it
-        was sized for (amortized-doubling resize; with auto slabs the
-        rebuild re-derives the count from |seen|, so the slab COUNT
-        grows with the crawl) — the exact table is always the source
-        of truth."""
-        from .operators.seen import IncrementalBloomSeen
-
-        if self._bloom_cache is not None and self._bloom_cache[0] == wave:
-            return self._bloom_cache[1], self._bloom_cache[2]
-        df = self.store.read("bloom_state", max_wave=wave - 1)
+    def _filter_states(self, wave: int) -> tuple[DataFrame, int]:
+        """Latest persisted filter state (≤ wave-1) plus its persisted
+        part count → (states, n_parts); rebuilt distributed from the
+        exact seen table when the tier's ``valid_parts`` rejects it
+        (fresh store, deleted checkpoint, crash between writes, an
+        inconsistent set, or a part past its capacity — the rebuild
+        re-derives the count from |seen|, so it grows with the crawl).
+        The exact table is always the source of truth."""
+        if self._filter_cache is not None and self._filter_cache[0] == wave:
+            return self._filter_cache[1], self._filter_cache[2]
+        tier = self._tier
+        df = self.store.read(tier.TABLE, max_wave=wave - 1)
         mw = df.agg(F.max("wave")).first()[0]
-        states = n_slabs = None
+        n_parts = None
         if mw is not None:
             states = df.filter(F.col("wave") == mw).drop("wave")
-            if IncrementalBloomSeen.needs_rebuild(
-                    states, want_slabs=self._bloom.n_slabs):
-                states = None
-            else:
-                n_slabs = IncrementalBloomSeen.state_slabs(states)
-        if states is None:
+            n_parts = tier.valid_parts(states)
+        if n_parts is None:
             seen = self.store.read("seen",
                                    max_wave=wave - 1).select("page_id")
-            if self._seen_rows is None:
-                self._seen_rows = self._seen_rows_upto(wave - 1)
-            states = self._bloom.build(seen, "page_id",
-                                       n_keys=self._seen_rows)
-            n_slabs = self._bloom.slabs_for(self._seen_rows)
+            states = tier.build(seen, "page_id", self._seen_rows)
+            n_parts = tier.parts_for(self._seen_rows)
         states = states.localCheckpoint()
-        self._bloom_cache = (wave, states, n_slabs)
-        return states, n_slabs
-
-    def _bloom_write(self, wave: int, new_keys: DataFrame) -> None:
-        """OR this wave's newly-seen keys into the slab bitmaps and
-        persist the full state set as this wave's rows (replacement,
-        like cuckoo_state — resume needs only the latest committed
-        wave; superseded partitions are pruned AFTER the wave's
-        manifest commit, so a crash mid-wave still has a committed
-        state to resume from — ADVICE r3 #3)."""
-        states, n_slabs = self._bloom_states(wave)
-        updated = self._bloom.update(states, new_keys, "page_id",
-                                     n_slabs=n_slabs)
-        self.store.write("bloom_state", updated, wave)
-        self._prune_after_commit.append(("bloom_state", wave))
-        self._bloom_cache = None
-
-    # ------------------------------------------------------------------
-    def _cuckoo_states(self, wave: int):
-        """Latest persisted shard blobs (≤ wave-1) plus their shard
-        count → (states, n_parts); rebuilt distributed from the exact
-        seen table when blobs are missing (fresh store, deleted
-        checkpoint, crash between seen and cuckoo_state writes), a
-        different shard count was explicitly configured (rebuild, never
-        mis-route — ADVICE r3 #1), or — in auto-shard mode — |seen|
-        reached the capacity the shard set was built for (the rebuild
-        re-derives the count with headroom, amortized doubling) — the
-        exact table is always the source of truth."""
-        if self._cuckoo_cache is not None and self._cuckoo_cache[0] == wave:
-            return self._cuckoo_cache[1], self._cuckoo_cache[2]
-        df = self.store.read("cuckoo_state", max_wave=wave - 1)
-        mw = df.agg(F.max("wave")).first()[0]
-        states = n_parts = None
-        if mw is not None:
-            states = df.filter(F.col("wave") == mw).drop("wave")
-            meta = states.select("n_parts").collect()
-            n_parts = int(meta[0]["n_parts"]) if meta else None
-            want = self._cuckoo.n_parts
-            if self._seen_rows is None:
-                self._seen_rows = self._seen_rows_upto(wave - 1)
-            stale = (
-                n_parts is None
-                or any(int(r["n_parts"]) != n_parts for r in meta)
-                or (want is not None and want != n_parts)
-                # auto mode: |seen| at/past design capacity → regrow
-                or (want is None
-                    and self._seen_rows >= n_parts * self._cuckoo.expected))
-            if stale:
-                states = n_parts = None
-        if states is None:
-            seen = self.store.read("seen",
-                                   max_wave=wave - 1).select("page_id")
-            if self._seen_rows is None:
-                self._seen_rows = self._seen_rows_upto(wave - 1)
-            states = self._cuckoo.build(seen, "page_id",
-                                        n_keys=self._seen_rows)
-            n_parts = self._cuckoo.parts_for(self._seen_rows)
-        states = states.localCheckpoint()
-        self._cuckoo_cache = (wave, states, n_parts)
+        self._filter_cache = (wave, states, n_parts)
         return states, n_parts
 
-    def _cuckoo_write(self, wave: int, new_keys: DataFrame) -> None:
-        """Insert this wave's newly-seen keys into the shard states and
-        persist the full state set as this wave's blobs (a few 100 KiB
-        per shard — replacement, not delta, so resume needs only the
-        latest committed wave).
+    def _filter_write(self, wave: int, new_keys: DataFrame) -> None:
+        """Insert this wave's newly-seen keys into the filter state and
+        persist the full state set as this wave's partition
+        (replacement, not delta, so resume needs only the latest
+        committed wave).
 
-        GC of superseded blob sets is DEFERRED until after the wave's
+        GC of superseded state sets is DEFERRED until after the wave's
         manifest commit (ADVICE r3 #3): pruning at write time would
         leave a crash-between-write-and-commit with no committed filter
         state at all, forcing a full O(|seen|) rebuild on every such
@@ -500,30 +412,29 @@ class SparkCrawler:
         is swept by cleanup-on-open and the next session rebuilds from
         `seen` (tests/test_seen.py kill-and-resume covers the rebuild).
         """
-        states, n_parts = self._cuckoo_states(wave)
-        updated = self._cuckoo.update(states, new_keys, "page_id",
-                                      n_parts=n_parts)
+        tier = self._tier
+        states, n_parts = self._filter_states(wave)
         try:
-            self.store.write("cuckoo_state", updated, wave)
+            self.store.write(tier.TABLE,
+                             tier.update(states, new_keys, "page_id",
+                                         n_parts), wave)
         except Exception as e:
-            # Auto-shard mode: a young crawl's BFS waves can grow
-            # faster than the pre-wave doubling check anticipated, so
-            # the incremental insert can overflow mid-update.  The
-            # exact `seen` table (written just before, same wave) is
-            # the source of truth — rebuild at the re-derived count.
-            # Explicit n_parts keeps the honest raise: a pinned shard
-            # count cannot absorb more keys by rebuilding.
-            if (self._cuckoo.n_parts is not None
-                    or "over capacity" not in str(e)):
+            # A young crawl's BFS waves can outgrow the pre-wave
+            # capacity check, so the incremental insert can overflow
+            # mid-update.  The exact `seen` table (written just before,
+            # same wave) is the source of truth — rebuild at the
+            # re-derived count.  The raise happens in an executor and
+            # reaches the driver as a PythonException, which loses its
+            # Python type: only the message identifies it.
+            if "over capacity" not in str(e):
                 raise
             seen_now = self.store.read(
                 "seen", max_wave=wave).select("page_id")
-            n_now = seen_now.count()
-            rebuilt = self._cuckoo.build(seen_now, "page_id",
-                                         n_keys=n_now)
-            self.store.write("cuckoo_state", rebuilt, wave)
-        self._prune_after_commit.append(("cuckoo_state", wave))
-        self._cuckoo_cache = None
+            self.store.write(tier.TABLE,
+                             tier.build(seen_now, "page_id",
+                                        seen_now.count()), wave)
+        self._prune_after_commit.append((tier.TABLE, wave))
+        self._filter_cache = None
 
     # ------------------------------------------------------------------
     def run(self) -> int:
@@ -555,7 +466,7 @@ class SparkCrawler:
                     # between-waves state compaction (storage.py): fold the
                     # committed wave partitions into size-tiered segments so
                     # long crawls don't accrete one dir per table per wave.
-                    # cuckoo_state/bloom_state are excluded — they are
+                    # the filter-state tables are excluded — they are
                     # full-replacement per wave (old blobs are garbage,
                     # not history), so merging would rewrite dead bytes.
                     # compaction rewrites the metrics table too → the
@@ -564,7 +475,8 @@ class SparkCrawler:
                     self.store.compact(
                         upto=wave,
                         names=[t for t in self.store_tables()
-                               if t not in ("cuckoo_state", "bloom_state")])
+                               if t not in {c.TABLE for c in
+                                            SEEN_TIERS.values()}])
                 wave += 1
         finally:
             # join the background metrics writer before returning so
@@ -768,38 +680,21 @@ class SparkCrawler:
 
         # |seen| from manifest counters (VERDICT r2 #3): one O(waves)
         # JSON read at resume, then pure in-memory increments.  Used to
-        # size the bloom filter AND to derive n_pending arithmetically.
+        # size the filter tier AND to derive n_pending arithmetically.
         if self._seen_rows is None:
             self._seen_rows = self._seen_rows_upto(wave - 1)
 
-        if self.seen_mode == "bloom":
-            # incremental persisted slab blooms (seen.py
-            # IncrementalBloomSeen): probe cogroups candidates with
-            # their own slab's bitmap; definite-negatives skip the
-            # exact anti-join, maybes go through the exact backstop —
-            # result ≡ exact, per-wave filter cost O(wave) not
-            # O(|seen|) (the old anti_join_bloom rebuilt the filter
-            # from the full seen table every wave).
-            states, n_slabs = self._bloom_states(wave)
-            sure_new, maybe = self._bloom.partition(states, flog,
-                                                    "page_id",
-                                                    n_slabs=n_slabs)
-            pending = sure_new.unionByName(
-                maybe.join(seen, "page_id", "left_anti"))
-        elif self.seen_mode == "cuckoo":
-            # probe the shard blobs: definite-negatives skip the exact
-            # anti-join entirely; maybes go through the exact backstop
-            # (cuckoo has no false negatives → result ≡ exact).
-            states, n_parts = self._cuckoo_states(wave)
-            marked = self._cuckoo.probe(self.spark, states, flog,
-                                        "page_id", n_parts=n_parts)
-            sure_new = marked.filter(~F.col("maybe_seen")) \
-                             .drop("maybe_seen")
-            maybe = marked.filter(F.col("maybe_seen")).drop("maybe_seen")
-            pending = sure_new.unionByName(
-                maybe.join(seen, "page_id", "left_anti"))
-        else:
+        if self._tier is None:
             pending = flog.join(seen, "page_id", "left_anti")
+        else:
+            # definite-negatives skip the exact anti-join; maybes go
+            # through the exact backstop (no false negatives → result
+            # ≡ exact), per-wave filter cost O(wave) not O(|seen|)
+            states, n_parts = self._filter_states(wave)
+            sure_new, maybe = self._tier.partition(states, flog,
+                                                   "page_id", n_parts)
+            pending = sure_new.unionByName(
+                maybe.join(seen, "page_id", "left_anti"))
 
         # robots gate (north_star): broadcast rules, Arrow-vectorized
         # verdict; disallowed rows leave the frontier into `seen`
@@ -945,10 +840,8 @@ class SparkCrawler:
 
         def _w_seen():
             store.write("seen", seen_add, wave)
-            if self.seen_mode == "cuckoo":
-                self._cuckoo_write(wave, seen_add)
-            elif self.seen_mode == "bloom":
-                self._bloom_write(wave, seen_add)
+            if self._tier is not None:
+                self._filter_write(wave, seen_add)
 
         def _w_docs():
             store.write("docs_out",
@@ -991,10 +884,8 @@ class SparkCrawler:
             # nothing fetched this wave: drop the empty partitions (the
             # seen partition holds exactly the blocked rows, so it
             # stays when blocked exist — same content the serialized
-            # path used to write).  cuckoo_state (if written) is a
-            # content-identical replacement; committed with blocked,
-            # swept by cleanup-on-open otherwise (rebuild-from-seen
-            # covers the gap).
+            # path used to write).  The filter state written with it
+            # is committed or discarded together with it.
             store.discard("crawl_order", wave)
             store.discard("docs_out", wave)
             if n_injected:
@@ -1020,6 +911,8 @@ class SparkCrawler:
                     self._seen_rows += n_blocked
             else:
                 store.discard("seen", wave)
+                if self._tier is not None:
+                    store.discard(self._tier.TABLE, wave)
                 self._prune_after_commit.clear()
             if blocked is not None:
                 blocked.unpersist()

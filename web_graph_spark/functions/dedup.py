@@ -483,7 +483,7 @@ def minhash_index_add(df: DataFrame, index_dir: str, n_hashes: int = 64,
     table's (band_idx, band_hash) keys stay uniform (hash values), so
     the probe join shuffles evenly; old signatures are never
     recomputed — per-dump cost is O(new batch), the same shape as the
-    crawler's IncrementalBloomSeen."""
+    crawler's persisted seen-filter tiers (operators/seen.py)."""
     sigs = minhash_signatures(df, n_hashes, shingle_n, id_col, text_col) \
         .localCheckpoint()
     sigs.write.mode("append").parquet(f"{index_dir}/sigs")

@@ -201,8 +201,9 @@ class IcebergWaveStore:
             f"DELETE FROM {self._tbl(name)} WHERE wave = {int(wave)}")
 
     def prune_waves(self, name: str, before: int) -> None:
-        """GC hook for full-replacement tables (cuckoo_state blobs):
-        partition-scoped DELETE is metadata-only in Iceberg."""
+        """GC hook for full-replacement tables (the seen-filter state
+        tables, bloom_state / cuckoo_state): partition-scoped DELETE
+        is metadata-only in Iceberg."""
         self.spark.sql(
             f"DELETE FROM {self._tbl(name)} WHERE wave < {int(before)}")
 

@@ -82,15 +82,14 @@ SCHEMAS = {
     "docs_out": ("doc_id string, spans array<struct<kind:string,text:string,"
                  "media_ref:string,offset:int>>"),
     "metrics": ("scope string, partition_id int, key string, value double"),
-    # partitioned-cuckoo seen tier: full shard-blob state set per wave
+    # seen-filter tiers (operators/seen.py, one TABLE per tier): one
+    # blob row per part, the full state set rewritten per wave
     # (replacement, not delta) — the per-partition checkpoint payload.
-    # n_parts is persisted so probe/update route by the state's OWN
-    # shard count (resume with a different config rebuilds instead of
-    # mis-routing — ADVICE r3 #1).
+    # The part count (n_parts / n_slabs) is persisted in every row so
+    # probe/update route by the state's OWN count, never one derived
+    # from the current |seen| (a mis-route emits false "definitely
+    # new" verdicts — ADVICE r3 #1).
     "cuckoo_state": "shard int, n_parts int, n_keys long, state binary",
-    # incremental slab-bloom seen tier: one bitmap row per slab, full
-    # replacement per wave (seen.py IncrementalBloomSeen); n_slabs
-    # persisted for the same routing-safety reason as cuckoo n_parts
     "bloom_state": ("slab int, n_slabs int, n_keys long, capacity long, "
                     "n_bits long, k int, words binary"),
 }
@@ -291,8 +290,9 @@ class WaveStore:
 
     def prune_waves(self, name: str, before: int) -> None:
         """Drop every wave partition < ``before`` — the GC hook for
-        full-replacement tables (cuckoo_state): each wave supersedes
-        all earlier ones, so older partitions are dead bytes."""
+        full-replacement tables (the seen-filter tiers' bloom_state /
+        cuckoo_state): each wave supersedes all earlier ones, so older
+        partitions are dead bytes."""
         for w in self._live_waves(name):
             if w < before:
                 self._drop_partition(name, w)
